@@ -60,7 +60,7 @@ def idempotent_epoch_append(df: DataFrame, path: str, epoch_id: int) -> None:
     same SQLConf, and a partitioned overwrite observed under ``static``
     would delete every other ``_epoch`` partition in the target table.
 
-    Layout guard: a table seeded under the old at-least-once default is
+    Layout guard: a table seeded under the old at-least-once layout is
     FLAT parquet (data files directly under ``path``). Appending
     ``_epoch=`` partition directories next to flat files would only blow
     up LATER, at read time, as a partition-discovery error far from the
@@ -116,8 +116,7 @@ def _reject_flat_table(spark: SparkSession, path: str) -> None:
             "appending _epoch= partitions to it would break partition "
             "discovery at read time. Migrate the seed first: "
             "idempotent_epoch_append(spark.read.parquet(path), new_dir, "
-            "epoch_id=-1), or pass idempotent=False to keep the legacy "
-            "flat at-least-once layout."
+            "epoch_id=-1)."
         )
 
 
@@ -198,21 +197,17 @@ def snapshot_overwrite_read(
 ) -> DataFrame:
     """``snapshot_overwrite`` + read-back of the just-committed version.
 
-    The streaming twins all need the merged state twice per epoch — once
-    for the snapshot write, once for the epoch report — and must not
-    compute the report from a plan that references the state dir being
-    overwritten. The original idiom was ``merged.localCheckpoint()``
-    (job 1) then the snapshot write (job 2) then the report (job 3).
-    The write itself is already a full materialization, so this helper
-    drops the checkpoint job: write straight from the lazy plan (job 1)
-    and hand consumers a scan of the committed ``_v=<version>`` files
-    (the report becomes job 2 over a tiny parquet read). One fewer
-    Spark job per twin per epoch, identical bytes either way (r16
-    optimization round; measured on streaming_stat_ingest_e2e — see
-    OPTIMIZATION_r16.md)."""
+    A streaming twin needs its merged state twice per epoch — for the
+    snapshot write and for the epoch report — and must not compute the
+    report from a plan that references the state dir being overwritten.
+    The write already materializes the merge, so consumers get a scan of
+    the committed ``_v=<version>`` files rather than a checkpoint of the
+    plan: one Spark job per twin per epoch fewer, identical bytes
+    (OPTIMIZATION_r16.md). The scan is handed the written frame's schema
+    because inferring it would run a footer-reading job of its own."""
     spark = df.sparkSession
     snapshot_overwrite(df, path, version, keep=keep)
-    return spark.read.parquet(f"{path}/_v={int(version)}")
+    return spark.read.schema(df.schema).parquet(f"{path}/_v={int(version)}")
 
 
 def latest_snapshot(spark: SparkSession, path: str) -> DataFrame:

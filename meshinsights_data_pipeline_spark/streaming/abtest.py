@@ -19,17 +19,33 @@ always-valid inference) in the decision layer if epochs gate decisions.
 
 State = one versioned snapshot table ``[experiment, arm, n, x]`` at
 |experiments x arms| cardinality — the smallest state in the twin
-family after Benford's. Summed counts are not re-merge-idempotent, so
-state reads use ``snapshot_before(epoch)``: a retried micro-batch
-recomputes from pre-epoch state and overwrites its own snapshot
-(the streaming_drift discipline). Report appends are exactly-once per
-epoch by default.
+family after Benford's — merged per epoch by ``streaming.merge``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state_ingest
+
+
+def _as_experiment_arm(
+    cells: DataFrame, experiment_col: str, arm_col: str
+) -> DataFrame:
+    """Rename the batch operator's cell columns to the state's fixed
+    ``experiment``/``arm`` names."""
+    return cells.withColumnsRenamed(
+        {experiment_col: "experiment", arm_col: "arm"}
+    )
+
+
+def _nx_sums() -> list[Column]:
+    """SUM-merge of the ``[n, x]`` conversion cells (A/B z and SPRT)."""
+    return [
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum("x").cast("bigint").alias("x"),
+    ]
 
 
 def streaming_abtest_ingest(
@@ -42,7 +58,6 @@ def streaming_abtest_ingest(
     cells_dir: str,
     report_dir: str,
     z_crit: float = 1.959964,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (experiment, arm) conversion
     cells into the A/B state, recompute the per-arm z report from the
@@ -57,54 +72,22 @@ def streaming_abtest_ingest(
         ab_cell_counts,
         ab_from_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # the batch operator's own cell stage — shared so the twin's
-        # conversion coercion can never drift from batch semantics.
-        batch_cells = ab_cell_counts(
-            batch_df, experiment_col, arm_col, converted_col
-        )
-        if experiment_col != "experiment":
-            batch_cells = batch_cells.withColumnRenamed(
-                experiment_col, "experiment"
-            )
-        if arm_col != "arm":
-            batch_cells = batch_cells.withColumnRenamed(arm_col, "arm")
-        prev = snapshot_before(spark, cells_dir, epoch_id).select(
-            "experiment", "arm", "n", "x"
-        )
-        # write-then-read-back (layout.snapshot_overwrite_read): one
-        # fewer job per epoch than the localCheckpoint idiom; both
-        # control-join sides read the committed _v= files.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_cells)
-            .groupBy("experiment", "arm")
-            .agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("x").cast("bigint").alias("x"),
-            ),
-            cells_dir,
-            version=epoch_id,
-        )
-
-        report = ab_from_counts(
+    # the batch operator's own cell stage — shared so the twin's
+    # conversion coercion can never drift from batch semantics.
+    return merge_state_ingest(
+        lambda batch: _as_experiment_arm(
+            ab_cell_counts(batch, experiment_col, arm_col, converted_col),
+            experiment_col, arm_col,
+        ),
+        ["experiment", "arm"],
+        _nx_sums(),
+        lambda merged: ab_from_counts(
             merged, "experiment", "arm", control_label, z_crit=z_crit
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+        ),
+        state_dir=cells_dir,
+        report_dir=report_dir,
+    )
 
 
 def streaming_mann_whitney_ingest(
@@ -117,7 +100,6 @@ def streaming_mann_whitney_ingest(
     cells_dir: str,
     report_dir: str,
     z_crit: float = 1.959964,
-    idempotent: bool = True,
     buckets: int | None = None,
     bounds: tuple[float, float] | None = None,
 ):
@@ -148,52 +130,25 @@ def streaming_mann_whitney_ingest(
         mw_cell_counts,
         mw_from_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # the batch operator's own count stage — shared so the twin's
-        # guards and quantization can never drift from batch semantics.
-        batch_cells = mw_cell_counts(
-            batch_df, experiment_col, arm_col, value_col,
-            buckets=buckets, bounds=bounds,
-        )
-        if experiment_col != "experiment":
-            batch_cells = batch_cells.withColumnRenamed(
-                experiment_col, "experiment"
-            )
-        if arm_col != "arm":
-            batch_cells = batch_cells.withColumnRenamed(arm_col, "arm")
-        prev = snapshot_before(spark, cells_dir, epoch_id).select(
-            "experiment", "arm", "_v", "_c"
-        )
-        # write-then-read-back (layout.snapshot_overwrite_read): one
-        # fewer job per epoch; arm list + arm cells + control replication
-        # all read the committed _v= files.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_cells)
-            .groupBy("experiment", "arm", "_v")
-            .agg(F.sum("_c").cast("bigint").alias("_c")),
-            cells_dir,
-            version=epoch_id,
-        )
-
-        report = mw_from_counts(
+    # the batch operator's own count stage — shared so the twin's
+    # guards and quantization can never drift from batch semantics.
+    return merge_state_ingest(
+        lambda batch: _as_experiment_arm(
+            mw_cell_counts(
+                batch, experiment_col, arm_col, value_col,
+                buckets=buckets, bounds=bounds,
+            ),
+            experiment_col, arm_col,
+        ),
+        ["experiment", "arm", "_v"],
+        [F.sum("_c").cast("bigint").alias("_c")],
+        lambda merged: mw_from_counts(
             merged, "experiment", "arm", control_label, z_crit=z_crit
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+        ),
+        state_dir=cells_dir,
+        report_dir=report_dir,
+    )
 
 
 def streaming_sprt_ingest(
@@ -208,7 +163,6 @@ def streaming_sprt_ingest(
     beta: float = 0.2,
     cells_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (experiment, arm) conversion
     cells into the SAME [n, x] state shape the A/B-z twin keeps, and
@@ -228,57 +182,23 @@ def streaming_sprt_ingest(
     """
     from meshinsights_data_pipeline_spark.operators.abtest import (
         ab_cell_counts,
+        sprt_constants,
         sprt_from_counts,
-    )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
     )
 
     # validate the constants at wiring time, not first micro-batch
-    from meshinsights_data_pipeline_spark.operators.abtest import (
-        sprt_constants,
-    )
-
     sprt_constants(p0, p1, alpha=alpha, beta=beta)
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_cells = ab_cell_counts(
-            batch_df, experiment_col, arm_col, converted_col
-        )
-        if experiment_col != "experiment":
-            batch_cells = batch_cells.withColumnRenamed(
-                experiment_col, "experiment"
-            )
-        if arm_col != "arm":
-            batch_cells = batch_cells.withColumnRenamed(arm_col, "arm")
-        prev = snapshot_before(spark, cells_dir, epoch_id).select(
-            "experiment", "arm", "n", "x"
-        )
-        # write-then-read-back (layout.snapshot_overwrite_read): one
-        # fewer job per epoch than the localCheckpoint idiom.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_cells)
-            .groupBy("experiment", "arm")
-            .agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("x").cast("bigint").alias("x"),
-            ),
-            cells_dir,
-            version=epoch_id,
-        )
-
-        report = sprt_from_counts(
+    return merge_state_ingest(
+        lambda batch: _as_experiment_arm(
+            ab_cell_counts(batch, experiment_col, arm_col, converted_col),
+            experiment_col, arm_col,
+        ),
+        ["experiment", "arm"],
+        _nx_sums(),
+        lambda merged: sprt_from_counts(
             merged, "experiment", "arm", p0, p1, alpha=alpha, beta=beta
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+        ),
+        state_dir=cells_dir,
+        report_dir=report_dir,
+    )

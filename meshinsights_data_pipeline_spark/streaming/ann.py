@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from meshinsights_data_pipeline_spark.operators.similarity import ivf_assign
+from meshinsights_data_pipeline_spark.sources.layout import idempotent_epoch_append
 
 
 def streaming_ivf_ingest(
@@ -31,41 +32,27 @@ def streaming_ivf_ingest(
     vectors_dir: str | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    idempotent: bool = True,
 ):
     """foreachBatch builder: per micro-batch, IVF-assign the new vectors
     (broadcast centroid argmax — map-side) and append [id, list_id] to
     ``lists_dir``; with ``vectors_dir`` set, also append the raw vectors
-    so searches need only the accumulated tables. ``idempotent`` defaults
-    True (exactly-once per epoch, matching the LSH/span ingest twins):
-    both appends route through epoch-keyed dynamic partition overwrite
+    so searches need only the accumulated tables. Appends are exactly-once
+    per epoch, matching the LSH/span ingest twins: both route through
+    epoch-keyed dynamic partition overwrite
     (sources.layout.idempotent_epoch_append) so micro-batch retries
     replace rather than duplicate — seed pre-existing tables with
-    ``idempotent_epoch_append(df, dir, epoch_id=-1)`` in that mode.
-    ``idempotent=False`` opts into plain at-least-once parquet appends
-    (duplicate rows on retry) for sinks that cannot host the epoch layout.
+    ``idempotent_epoch_append(df, dir, epoch_id=-1)``.
 
     Returns a callable for ``stream.writeStream.foreachBatch(...)``.
     """
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         assigned = ivf_assign(batch_df, centroids, id_col, vec_col)
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
+        idempotent_epoch_append(assigned, lists_dir, epoch_id)
+        if vectors_dir is not None:
+            idempotent_epoch_append(
+                batch_df.select(id_col, vec_col), vectors_dir, epoch_id
             )
-
-            idempotent_epoch_append(assigned, lists_dir, epoch_id)
-            if vectors_dir is not None:
-                idempotent_epoch_append(
-                    batch_df.select(id_col, vec_col), vectors_dir, epoch_id
-                )
-        else:
-            assigned.write.mode("append").parquet(lists_dir)
-            if vectors_dir is not None:
-                batch_df.select(id_col, vec_col).write.mode("append").parquet(
-                    vectors_dir
-                )
 
     return _process
 
@@ -80,7 +67,6 @@ def streaming_pq_ingest(
     m: int = 8,
     ks: int = 16,
     seed: int = 11,
-    idempotent: bool = True,
 ):
     """foreachBatch builder: PQ-encode each micro-batch of arriving
     vectors against the FIXED deterministic codebooks (the same
@@ -94,9 +80,9 @@ def streaming_pq_ingest(
     retrainings — drifting them online would silently re-interpret past
     codes.
 
-    ``idempotent`` defaults True (exactly-once per epoch, matching the
-    other ingest twins): appends route through epoch-keyed dynamic
-    partition overwrite; seed pre-existing tables with
+    Appends are exactly-once per epoch, matching the other ingest twins:
+    they route through epoch-keyed dynamic partition overwrite; seed
+    pre-existing tables with
     ``idempotent_epoch_append(df, dir, epoch_id=-1)``. The per-batch
     encode job runs under the same no-wholestage scope as the batch
     operator (the PQ expression tree overflows whole-stage codegen's
@@ -112,13 +98,6 @@ def streaming_pq_ingest(
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         codes = pq_encode(batch_df, id_col, vec_col, dim, m, ks, seed)
         with _no_wholestage(batch_df.sparkSession):
-            if idempotent:
-                from meshinsights_data_pipeline_spark.sources.layout import (
-                    idempotent_epoch_append,
-                )
-
-                idempotent_epoch_append(codes, codes_dir, epoch_id)
-            else:
-                codes.write.mode("append").parquet(codes_dir)
+            idempotent_epoch_append(codes, codes_dir, epoch_id)
 
     return _process

@@ -22,15 +22,17 @@ deployment whose event time advances monotonically across epochs can
 prune rows older than the lookback horizon; pruning is NOT applied here
 because a late conversion may still attribute to an old touch.
 
-Deduped min-id-per-timestamp state is re-merge-idempotent, but state
-reads still use ``snapshot_before(epoch)`` for uniformity with the
-other twins; attribution appends are exactly-once per epoch by default.
+Deduped min-id-per-timestamp state is re-merge-idempotent; it is still
+MIN-merged per epoch by ``streaming.merge`` like every other twin's
+state, and attribution appends are exactly-once per epoch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state
 
 
 def attribution_state_schema(
@@ -65,7 +67,6 @@ def streaming_attribution_ingest(
     conversion: str = "purchase",
     touch: str = "click",
     lookback_hours: int = 24,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch touches into state, attribute
     the batch's conversions against the merged history, append
@@ -79,27 +80,19 @@ def streaming_attribution_ingest(
         last_touch_attribution,
     )
     from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
+        idempotent_epoch_append,
     )
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_touches = (
+        merged = merge_state(
             batch_df.filter(F.col(type_col) == touch)
             .groupBy(F.col(user_col), F.col(ts_col).alias("t_ts"))
-            .agg(F.min(id_col).alias("touch_id"))
+            .agg(F.min(id_col).alias("touch_id")),
+            [user_col, "t_ts"],
+            [F.min("touch_id").alias("touch_id")],
+            state_dir=touches_dir,
+            epoch_id=epoch_id,
         )
-        prev = snapshot_before(spark, touches_dir, epoch_id).select(
-            user_col, "t_ts", "touch_id"
-        )
-        merged = (
-            prev.union(batch_touches)
-            .groupBy(user_col, "t_ts")
-            .agg(F.min("touch_id").alias("touch_id"))
-            .localCheckpoint()  # feeds the snapshot write AND attribution
-        )
-        snapshot_overwrite(merged, touches_dir, version=epoch_id)
 
         # Reconstruct an event frame of (batch conversions + ALL touches
         # seen so far) and run the BATCH operator — streaming scores are
@@ -128,13 +121,6 @@ def streaming_attribution_ingest(
             touch=touch,
             lookback_hours=lookback_hours,
         )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(out, attributions_dir, epoch_id)
-        else:
-            out.write.mode("append").parquet(attributions_dir)
+        idempotent_epoch_append(out, attributions_dir, epoch_id)
 
     return _process

@@ -19,16 +19,17 @@ batches it spans) — aggregate upstream if the source can split baskets.
 
 State = three mergeable tables: ``[item_a, item_b, n_ab]`` keyed on the
 pair, ``[i, n_i]`` keyed on the item, and a 1-row ``[n_baskets]`` —
-bounded by the observed pair/item vocabulary, never the stream length.
-Summed counts are not re-merge-idempotent, so state reads use
-``snapshot_before(epoch)``; stat appends are exactly-once per epoch by
-default.
+bounded by the observed pair/item vocabulary, never the stream length,
+each merged per epoch by ``streaming.merge``; stat appends are
+exactly-once per epoch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state
 
 BASKET_PAIRS_SCHEMA = "item_a long, item_b long, n_ab long"
 BASKET_ITEMS_SCHEMA = "i long, n_i long"
@@ -45,7 +46,6 @@ def streaming_basket_ingest(
     stats_dir: str,
     min_support_count: int = 2,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch basket counts into state, emit
     association stats ``[item_a, item_b, n_ab, support, confidence_a_b,
@@ -55,13 +55,14 @@ def streaming_basket_ingest(
     using the matching ``BASKET_*_SCHEMA``. Returns the callable for
     ``stream.writeStream.foreachBatch(...)``.
     """
+    from meshinsights_data_pipeline_spark.operators.basket import (
+        association_stats,
+    )
     from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
+        idempotent_epoch_append,
     )
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         bi = (
             batch_df.select(
                 F.col(basket_col).alias("b"), F.col(item_col).alias("i")
@@ -77,43 +78,26 @@ def streaming_basket_ingest(
             .groupBy("item_a", "item_b")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
         )
-        merged_pairs = (
-            snapshot_before(spark, pairs_dir, epoch_id)
-            .select("item_a", "item_b", "n_ab")
-            .union(batch_pairs)
-            .groupBy("item_a", "item_b")
-            .agg(F.sum("n_ab").cast("bigint").alias("n_ab"))
-            .localCheckpoint()
+        merged_pairs = merge_state(
+            batch_pairs,
+            ["item_a", "item_b"],
+            [F.sum("n_ab").cast("bigint").alias("n_ab")],
+            state_dir=pairs_dir,
+            epoch_id=epoch_id,
         )
-        snapshot_overwrite(merged_pairs, pairs_dir, version=epoch_id)
-
-        batch_items = bi.groupBy("i").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_i")
+        merged_items = merge_state(
+            bi.groupBy("i").agg(F.count(F.lit(1)).cast("bigint").alias("n_i")),
+            ["i"],
+            [F.sum("n_i").cast("bigint").alias("n_i")],
+            state_dir=items_dir,
+            epoch_id=epoch_id,
         )
-        merged_items = (
-            snapshot_before(spark, items_dir, epoch_id)
-            .select("i", "n_i")
-            .union(batch_items)
-            .groupBy("i")
-            .agg(F.sum("n_i").cast("bigint").alias("n_i"))
-            .localCheckpoint()
-        )
-        snapshot_overwrite(merged_items, items_dir, version=epoch_id)
-
-        batch_total = bi.agg(
-            F.countDistinct("b").cast("bigint").alias("n_baskets")
-        )
-        merged_total = (
-            snapshot_before(spark, totals_dir, epoch_id)
-            .select("n_baskets")
-            .union(batch_total)
-            .agg(F.sum("n_baskets").cast("bigint").alias("n_baskets"))
-            .localCheckpoint()
-        )
-        snapshot_overwrite(merged_total, totals_dir, version=epoch_id)
-
-        from meshinsights_data_pipeline_spark.operators.basket import (
-            association_stats,
+        merged_total = merge_state(
+            bi.agg(F.countDistinct("b").cast("bigint").alias("n_baskets")),
+            [],
+            [F.sum("n_baskets").cast("bigint").alias("n_baskets")],
+            state_dir=totals_dir,
+            epoch_id=epoch_id,
         )
 
         stats = association_stats(
@@ -125,13 +109,6 @@ def streaming_basket_ingest(
             merged_total,
             round_to,
         )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(stats, stats_dir, epoch_id)
-        else:
-            stats.write.mode("append").parquet(stats_dir)
+        idempotent_epoch_append(stats, stats_dir, epoch_id)
 
     return _process

@@ -12,15 +12,16 @@ synthesizing amounts bends the digit distribution epoch over epoch.
 
 State is TINY by construction — 9 rows per group — so this is the
 cheapest twin in the family: the merge shuffle carries at most
-9 x |groups| rows regardless of batch size. snapshot_before(epoch)
-reads keep retries idempotent; report appends are exactly-once per
-epoch by default.
+9 x |groups| rows regardless of batch size. It is merged per epoch by
+``streaming.merge``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state_ingest
 
 
 def streaming_benford_ingest(
@@ -30,7 +31,6 @@ def streaming_benford_ingest(
     *,
     counts_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (group, digit) counts into the
     Benford state, recompute the conformance report from the merged
@@ -44,39 +44,15 @@ def streaming_benford_ingest(
         benford_digit_counts,
         benford_from_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
+
+    # the batch operator's own digit stage — shared so the twin's
+    # domain guards (NULL group, |v| >= 1e12 ANSI overflow) can
+    # never drift from batch semantics
+    return merge_state_ingest(
+        lambda batch: benford_digit_counts(batch, group_col, value_col),
+        ["g", "_d"],
+        [F.sum("_c").cast("bigint").alias("_c")],
+        benford_from_counts,
+        state_dir=counts_dir,
+        report_dir=report_dir,
     )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # the batch operator's own digit stage — shared so the twin's
-        # domain guards (NULL group, |v| >= 1e12 ANSI overflow) can
-        # never drift from batch semantics
-        batch_counts = benford_digit_counts(batch_df, group_col, value_col)
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "g", "_d", "_c"
-        )
-        merged = (
-            prev.union(batch_counts)
-            .groupBy("g", "_d")
-            .agg(F.sum("_c").cast("bigint").alias("_c"))
-            .localCheckpoint()  # consumed by the report AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
-
-        report = benford_from_counts(merged).withColumn(
-            "epoch", F.lit(int(epoch_id)).cast("bigint")
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process

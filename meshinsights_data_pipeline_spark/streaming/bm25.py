@@ -17,10 +17,9 @@ the same documented delta as streaming_lm_ingest.
 State = ONE mergeable counter table ``[key, val]`` holding ``n``,
 ``tl``, and one ``df:<term>`` row per query term — ``|Q| + 2`` rows,
 the smallest GLOBAL state table in the streaming family (dsir's is
-4096; the per-KEY minimum is the CUSUM twin's two scalars per key).
-Summed counters are not re-merge-idempotent, so state reads use
-``snapshot_before(epoch)``; score appends are exactly-once per epoch by
-default (epoch-keyed dynamic partition overwrite).
+4096; the per-KEY minimum is the CUSUM twin's two scalars per key),
+merged per epoch by ``streaming.merge``; score appends are exactly-once
+per epoch.
 
 Scale: per-batch work is one batch tokenize pass (document length
 map-side, only query-term tokens shuffle) plus a merge on the bounded
@@ -33,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state
 
 COUNTER_SCHEMA = "key string, val long"
 
@@ -47,7 +48,6 @@ def streaming_bm25_ingest(
     k1: float = 1.2,
     b: float = 0.75,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch corpus counters into state,
     score the batch docs against the merged statistics, append scores.
@@ -61,14 +61,12 @@ def streaming_bm25_ingest(
         _bm25_score,
     )
     from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
+        idempotent_epoch_append,
     )
 
     terms = list(query_terms)
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         dls, tf = _bm25_frames(batch_df, id_col, text_col, terms)
         # tf feeds the df-counter increment AND the scoring join
         tf = tf.localCheckpoint()
@@ -86,15 +84,13 @@ def streaming_bm25_ingest(
                 )
             )
         )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select("key", "val")
-        merged = (
-            prev.union(batch_counters)
-            .groupBy("key")
-            .agg(F.sum("val").cast("bigint").alias("val"))
-            .localCheckpoint()  # consumed by scoring AND the snapshot
-            # write; must not read a plan referencing its own output dir
+        merged = merge_state(
+            batch_counters,
+            ["key"],
+            [F.sum("val").cast("bigint").alias("val")],
+            state_dir=counts_dir,
+            epoch_id=epoch_id,
         )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
 
         # the same [n, avgdl] / [term, df] shapes — and therefore the
         # same score expression tree — as the batch operator
@@ -107,13 +103,6 @@ def streaming_bm25_ingest(
             F.col("val").alias("df"),
         )
         scores = _bm25_score(tf, dfreq, stats, id_col, k1, b, round_to)
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(scores, scores_dir, epoch_id)
-        else:
-            scores.write.mode("append").parquet(scores_dir)
+        idempotent_epoch_append(scores, scores_dir, epoch_id)
 
     return _process

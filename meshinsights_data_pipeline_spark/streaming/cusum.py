@@ -19,7 +19,7 @@ State carries the UNROUNDED decimals (rounding only at emission), so
 parity holds even at 6dp boundaries; rows with NULL/NaN values are
 guarded out BEFORE state updates (the r12 rolling-twin lesson: an
 unguarded bad row must not perturb carried state). Exactly-once per
-epoch by default via ``idempotent_epoch_append``.
+epoch via ``idempotent_epoch_append``.
 """
 
 from __future__ import annotations
@@ -47,7 +47,6 @@ def streaming_cusum_ingest(
     target: float,
     slack: float = 0.5,
     threshold: float = 5.0,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: score the batch rows' two-sided CUSUM
     seeded by the carried per-key statistics, append
@@ -112,13 +111,10 @@ def streaming_cusum_ingest(
         snapshot_overwrite(last.unionByName(untouched), state_dir,
                            version=epoch_id)
 
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        from meshinsights_data_pipeline_spark.sources.layout import (
+            idempotent_epoch_append,
+        )
 
-            idempotent_epoch_append(out, scores_dir, epoch_id)
-        else:
-            out.write.mode("append").parquet(scores_dir)
+        idempotent_epoch_append(out, scores_dir, epoch_id)
 
     return _process

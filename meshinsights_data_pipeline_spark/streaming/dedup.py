@@ -19,10 +19,11 @@ Design notes (100 TB / unbounded):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
 from pyspark.sql import functions as F
 
 from meshinsights_data_pipeline_spark.operators.text import fingerprint
+from meshinsights_data_pipeline_spark.sources.layout import idempotent_epoch_append
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state
 
 
 def streaming_exact_dedup(
@@ -49,7 +50,6 @@ def streaming_lsh_ingest(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    idempotent: bool = True,
     shingle_fn=None,
 ):
     """Incremental near-dup candidate detection for a continuous ingest
@@ -64,12 +64,11 @@ def streaming_lsh_ingest(
     ``signature_dir`` is the accumulated banded-signature TABLE. Seed it
     with the existing corpus via ``idempotent_epoch_append(
     banded_signatures(corpus, ...), signature_dir, epoch_id=-1)`` (an
-    empty frame with the right schema for a cold start) — with the
-    default ``idempotent=True`` the table is epoch-partitioned, and a
-    plain flat ``banded_signatures(...).write`` seed would collide with
-    the first batch's ``_epoch=...`` directories (mixed flat+partitioned
-    layout fails partition discovery). Only with ``idempotent=False``
-    is a flat parquet seed correct. Each micro-batch, inside
+    empty frame with the right schema for a cold start) — the table is
+    epoch-partitioned, and a plain flat ``banded_signatures(...).write``
+    seed would collide with the first batch's ``_epoch=...`` directories
+    (mixed flat+partitioned layout fails partition discovery). Each
+    micro-batch, inside
     ``foreachBatch`` (batch semantics — the signature window functions
     are unsupported on streaming frames):
 
@@ -99,19 +98,12 @@ def streaming_lsh_ingest(
 
     Scale notes: the per-batch work is micro-batch x bucket-mates — never
     table^2; the (band, sig) join is broadcast-eligible while batches are
-    small and AQE-planned once they are not. Appends default to
-    ``idempotent=True`` (matching ``streaming_span_ingest``): both appends
-    go through ``sources.layout.idempotent_epoch_append`` — epoch-keyed
-    dynamic partition overwrite, so a retried micro-batch REPLACES its own
-    files and the sink is exactly-once per epoch (the labels rewrite is
-    already idempotent: re-merging the same pairs is a labeling no-op). In
-    that mode, seed ``signature_dir`` with ``idempotent_epoch_append(seed,
-    dir, epoch_id=-1)`` so the directory layout is uniformly
-    epoch-partitioned, and expect an ``_epoch`` partition column when
-    reading the tables. ``idempotent=False`` opts into plain at-least-once
-    parquet appends (duplicate pair/signature ROWS on micro-batch retry;
-    downstream consumers must distinct) for sinks that cannot host the
-    epoch layout.
+    small and AQE-planned once they are not. Both appends go through
+    ``sources.layout.idempotent_epoch_append`` — epoch-keyed dynamic
+    partition overwrite, so a retried micro-batch REPLACES its own files
+    and the sink is exactly-once per epoch (the labels rewrite is already
+    idempotent: re-merging the same pairs is a labeling no-op). Expect an
+    ``_epoch`` partition column when reading the tables.
 
     Returns a callable for ``stream.writeStream.foreachBatch(...)``; the
     caller owns trigger/checkpoint wiring.
@@ -152,14 +144,7 @@ def streaming_lsh_ingest(
         # Materialized once: appended to the pair log AND (optionally)
         # folded into the labels table.
         new_pairs = vs_table.union(intra).distinct().localCheckpoint()
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(new_pairs, pairs_dir, epoch_id)
-        else:
-            new_pairs.write.mode("append").parquet(pairs_dir)
+        idempotent_epoch_append(new_pairs, pairs_dir, epoch_id)
         if labels_dir is not None:
             from meshinsights_data_pipeline_spark.operators.components import (
                 incremental_components,
@@ -177,14 +162,7 @@ def streaming_lsh_ingest(
             # would corrupt the result.
             merged = incremental_components(labels, new_pairs).localCheckpoint()
             snapshot_overwrite(merged, labels_dir, version=epoch_id)
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(nb, signature_dir, epoch_id)
-        else:
-            nb.write.mode("append").parquet(signature_dir)
+        idempotent_epoch_append(nb, signature_dir, epoch_id)
 
     return _process
 
@@ -198,7 +176,6 @@ def streaming_span_ingest(
     spans_dir: str,
     n: int = 5,
     min_docs: int = 2,
-    idempotent: bool = True,
 ):
     """Incremental cross-document duplicate-span detection — the streaming
     twin of ``operators.corpus.duplicate_spans`` (ExactSubstr-style span
@@ -213,12 +190,9 @@ def streaming_span_ingest(
 
     1. hash the batch docs' positional word-n-grams (one localCheckpointed
        pass, same frame the batch operator shares),
-    2. merge the batch's per-gram doc counts into the table — READ VIA
-       ``snapshot_before(epoch)``, never ``latest_snapshot``: summed
-       counts are NOT re-merge-idempotent, and on a retry the latest
-       committed snapshot can be this epoch's own earlier attempt
-       (double-count). Reading strictly below the epoch makes every
-       attempt a pure function of (pre-epoch state, batch),
+    2. merge the batch's per-gram doc counts into the table with
+       ``streaming.merge.merge_state`` (retry-safe: a re-run epoch never
+       double-counts),
     3. emit merged [id, span_start, span_end, dup_grams] spans for the
        BATCH docs whose grams now reach ``min_docs`` distinct documents
        (history + batch combined), and append them to ``spans_dir``.
@@ -234,14 +208,11 @@ def streaming_span_ingest(
     Scale notes: state is gram-cardinality (the n-gram vocabulary), the
     same order as the LSH signature table; per-batch work is one
     micro-batch gram pass + a gram-keyed join against the counts table.
-    Span appends default to ``idempotent=True`` (epoch-keyed dynamic
-    partition overwrite, exactly-once per epoch), mirroring the counts
-    snapshot's exactly-once version floor — a micro-batch retry must not
-    re-append identical span rows. ``idempotent=False`` opts into plain
-    at-least-once appends for sinks that cannot host the epoch layout.
-    Docs are assumed to arrive once (dedup the stream upstream with
-    ``streaming_exact_dedup`` otherwise — a re-arriving doc would count
-    itself as its own duplicate).
+    Span appends are exactly-once per epoch (epoch-keyed dynamic
+    partition overwrite) — a micro-batch retry must not re-append
+    identical span rows. Docs are assumed to arrive once (dedup the
+    stream upstream with ``streaming_exact_dedup`` otherwise — a
+    re-arriving doc would count itself as its own duplicate).
 
     Returns a callable for ``stream.writeStream.foreachBatch(...)``; the
     caller owns trigger/checkpoint wiring.
@@ -250,43 +221,25 @@ def streaming_span_ingest(
         merge_hit_spans,
         positional_shingle_hashes,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         bg = positional_shingle_hashes(
             batch_df, id_col, text_col, n
         ).localCheckpoint()  # consumed by counts merge + span join + hits
-        batch_counts = (
+        merged = merge_state(
             bg.select("h", id_col)
             .distinct()
             .groupBy("h")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select("h", "n_docs")
-        merged = (
-            prev.union(batch_counts)
-            .groupBy("h")
-            .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
-            .localCheckpoint()  # materialize BEFORE the snapshot write and
-            # the span join: both consume it, and on retry the write path
-            # must not read a plan that references its own output dir.
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs")),
+            ["h"],
+            [F.sum("n_docs").cast("bigint").alias("n_docs")],
+            state_dir=counts_dir,
+            epoch_id=epoch_id,
         )
         dup = merged.filter(F.col("n_docs") >= min_docs).select("h")
         hits = bg.join(dup, "h").select(F.col(id_col), F.col("pos"))
         spans = merge_hit_spans(hits, id_col, n)
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(spans, spans_dir, epoch_id)
-        else:
-            spans.write.mode("append").parquet(spans_dir)
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
+        idempotent_epoch_append(spans, spans_dir, epoch_id)
 
     return _process
 
@@ -303,7 +256,6 @@ def streaming_payload_lsh_ingest(
     stride: int = 4,
     num_hashes: int = 16,
     bands: int = 4,
-    idempotent: bool = True,
 ):
     """Incremental BINARY near-dup detection — ``streaming_lsh_ingest``
     over byte shingles (``multimodal.payload_shingle_hashes``): media
@@ -326,7 +278,6 @@ def streaming_payload_lsh_ingest(
         labels_dir=labels_dir,
         num_hashes=num_hashes,
         bands=bands,
-        idempotent=idempotent,
         shingle_fn=lambda d: payload_shingle_hashes(
             d, id_col, payload_col, n_bytes, stride
         ),

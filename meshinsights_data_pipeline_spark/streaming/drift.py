@@ -16,12 +16,8 @@ State = one mergeable snapshot table (``sources.layout`` versioned
 snapshots): ``[source, h, c_st]`` at |source| x |vocab| cardinality.
 Tokens are stored as 60-bit hashes — TV distance and chi-square are
 invariant under injective token renaming, and hashing keeps strings out
-of the merge shuffle (the ``streaming_lm_ingest`` discipline). Summed
-counts are NOT re-merge-idempotent, so state reads use
-``snapshot_before(epoch)``: a retried micro-batch recomputes from
-pre-epoch state and overwrites its own snapshot instead of
-double-counting. Report appends are exactly-once per epoch by default
-(epoch-keyed dynamic partition overwrite).
+of the merge shuffle (the ``streaming_lm_ingest`` discipline). The
+state is merged per epoch by ``streaming.merge``.
 
 Scale: per-batch work is one batch token pass plus a merge keyed on
 (source, hash); the drift recompute runs entirely at count-table
@@ -33,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state_ingest
+
 
 def streaming_drift_ingest(
     stream: DataFrame,
@@ -41,7 +39,6 @@ def streaming_drift_ingest(
     *,
     counts_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch token counts into the drift
     state, recompute the per-source drift report from the merged counts,
@@ -57,14 +54,9 @@ def streaming_drift_ingest(
         drift_from_counts,
     )
     from meshinsights_data_pipeline_spark.operators.text import normalized_text
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_counts = (
+    def _batch_counts(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 F.col(source_col).alias("source"),
                 F.explode(
@@ -75,28 +67,12 @@ def streaming_drift_ingest(
             .groupBy("source", md5_int60(F.col("tok")).alias("h"))
             .agg(F.count(F.lit(1)).cast("double").alias("c_st"))
         )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "source", "h", "c_st"
-        )
-        merged = (
-            prev.union(batch_counts)
-            .groupBy("source", "h")
-            .agg(F.sum("c_st").alias("c_st"))
-            .localCheckpoint()  # consumed by the report AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
 
-        report = drift_from_counts(
-            merged.withColumnRenamed("h", "tok")
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return merge_state_ingest(
+        _batch_counts,
+        ["source", "h"],
+        [F.sum("c_st").alias("c_st")],
+        lambda merged: drift_from_counts(merged.withColumnRenamed("h", "tok")),
+        state_dir=counts_dir,
+        report_dir=report_dir,
+    )

@@ -16,10 +16,8 @@ as streaming_lm_ingest.
 State = ONE mergeable snapshot table of raw bucket counts [b, c_r],
 bounded by the ``buckets`` feature-space size (4096 rows by default —
 smaller than any corpus-growing state; bm25's |Q|+2 and the CUSUM
-twin's two scalars/key are the family minima). Summed counts are
-not re-merge-idempotent, so state reads use ``snapshot_before(epoch)``;
-score appends are exactly-once per epoch by default (epoch-keyed
-dynamic partition overwrite).
+twin's two scalars/key are the family minima), merged per epoch by
+``streaming.merge``; score appends are exactly-once per epoch.
 
 Scale: per-batch work is one batch tokenize pass plus a merge keyed on
 a bounded int bucket space; the target counts are computed ONCE at
@@ -32,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state
+
 
 def streaming_dsir_ingest(
     target_df: DataFrame,
@@ -42,7 +42,6 @@ def streaming_dsir_ingest(
     scores_dir: str,
     buckets: int = 4096,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch bucket counts into the raw
     count state, score the batch docs against the merged raw model and
@@ -58,8 +57,7 @@ def streaming_dsir_ingest(
         dsir_score,
     )
     from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
+        idempotent_epoch_append,
     )
 
     # Static target counts: computed once, consumed by every epoch.
@@ -71,36 +69,23 @@ def streaming_dsir_ingest(
     )
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         per_doc = (
             dsir_doc_buckets(batch_df, id_col, text_col, buckets)
             .groupBy(F.col(id_col), F.col("b"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("nb"))
             .localCheckpoint()  # feeds the state merge AND the score join
         )
-        batch_cr = per_doc.groupBy("b").agg(
-            F.sum("nb").cast("bigint").alias("c_r")
+        merged_cr = merge_state(
+            per_doc.groupBy("b").agg(F.sum("nb").cast("bigint").alias("c_r")),
+            ["b"],
+            [F.sum("c_r").cast("bigint").alias("c_r")],
+            state_dir=counts_dir,
+            epoch_id=epoch_id,
         )
-        prev_cr = snapshot_before(spark, counts_dir, epoch_id).select("b", "c_r")
-        merged_cr = (
-            prev_cr.union(batch_cr)
-            .groupBy("b")
-            .agg(F.sum("c_r").cast("bigint").alias("c_r"))
-            .localCheckpoint()  # consumed by lambda AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged_cr, counts_dir, version=epoch_id)
 
         scores = dsir_score(
             per_doc, dsir_lambda(merged_cr, c_t, buckets), id_col, round_to
         )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(scores, scores_dir, epoch_id)
-        else:
-            scores.write.mode("append").parquet(scores_dir)
+        idempotent_epoch_append(scores, scores_dir, epoch_id)
 
     return _process

@@ -16,15 +16,16 @@ from the mix it is supposed to feed.
 State = one versioned snapshot table ``[source, _tok(hash), _c]`` at
 |source| x |vocab| cardinality — the entropy-twin state shape (the two
 twins can share ingest plumbing upstream; this one exists so JS can be
-recomputed without re-reading any corpus). snapshot_before(epoch) reads
-keep retries idempotent; report appends are exactly-once per epoch by
-default.
+recomputed without re-reading any corpus), merged per epoch by
+``streaming.merge``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state_ingest
 
 
 def streaming_jsd_ingest(
@@ -34,7 +35,6 @@ def streaming_jsd_ingest(
     *,
     counts_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (source, token-hash) counts
     into the JS state, recompute the per-source JS-vs-corpus report
@@ -48,47 +48,15 @@ def streaming_jsd_ingest(
         js_from_counts,
         source_token_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
+
+    # the batch operator's own tokenize+count stage (hashed-key tier)
+    return merge_state_ingest(
+        lambda batch: source_token_counts(
+            batch, source_col, text_col, hashed=True
+        ).withColumnRenamed(source_col, "source"),
+        ["source", "_tok"],
+        [F.sum("_c").cast("bigint").alias("_c")],
+        lambda merged: js_from_counts(merged, "source"),
+        state_dir=counts_dir,
+        report_dir=report_dir,
     )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # the batch operator's own tokenize+count stage (hashed-key
-        # tier) — shared so the twin's tokenization can never drift
-        # from batch semantics if the normalization changes.
-        batch_counts = source_token_counts(
-            batch_df, source_col, text_col, hashed=True
-        )
-        if source_col != "source":
-            batch_counts = batch_counts.withColumnRenamed(
-                source_col, "source"
-            )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "source", "_tok", "_c"
-        )
-        # write-then-read-back (see layout.snapshot_overwrite_read): one
-        # fewer job per epoch than the localCheckpoint idiom; the report
-        # reads the committed _v= files, never the dir being overwritten.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_counts)
-            .groupBy("source", "_tok")
-            .agg(F.sum("_c").cast("bigint").alias("_c")),
-            counts_dir,
-            version=epoch_id,
-        )
-
-        report = js_from_counts(merged, "source").withColumn(
-            "epoch", F.lit(int(epoch_id)).cast("bigint")
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process

@@ -8,14 +8,11 @@ batch the report equals the batch operator run over everything ingested
 so far (FULL cross-batch parity, the PMI/drift-twin shape; tested).
 
 State = one versioned snapshot table ``[g, _v, _c_gv]`` at
-|groups| x |distinct values| cardinality — bounded for quantized or
-discrete values; quantize upstream (histogram_fixed_width bin ids) for
-continuous streams, which bounds the state AND the recompute grid with
-the same code path as the batch tier. Summed counts are NOT
-re-merge-idempotent, so state reads use ``snapshot_before(epoch)``: a
-retried micro-batch recomputes from pre-epoch state and overwrites its
-own snapshot instead of double-counting (the streaming_drift_ingest
-discipline). Report appends are exactly-once per epoch by default.
+|groups| x |distinct values| cardinality, merged per epoch by
+``streaming.merge`` — bounded for quantized or discrete values; quantize
+upstream (histogram_fixed_width bin ids) for continuous streams, which
+bounds the state AND the recompute grid with the same code path as the
+batch tier.
 
 Scale: per-batch work is one batch count pass plus a merge keyed on
 (g, v); the KS recompute runs entirely at count-table cardinality — the
@@ -27,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state_ingest
+
 
 def streaming_ks_ingest(
     stream: DataFrame,
@@ -35,7 +34,6 @@ def streaming_ks_ingest(
     *,
     counts_dir: str,
     report_dir: str,
-    idempotent: bool = True,
     buckets: int | None = None,
     bounds: tuple[float, float] | None = None,
 ):
@@ -62,43 +60,16 @@ def streaming_ks_ingest(
         ks_from_counts,
         ks_value_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
+
+    # the batch operator's own count stage — shared so the twin's
+    # guards (NULL group/value) can never drift from batch semantics.
+    return merge_state_ingest(
+        lambda batch: ks_value_counts(
+            batch, group_col, value_col, buckets=buckets, bounds=bounds
+        ),
+        ["g", "_v"],
+        [F.sum("_c_gv").cast("bigint").alias("_c_gv")],
+        ks_from_counts,
+        state_dir=counts_dir,
+        report_dir=report_dir,
     )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # the batch operator's own count stage — shared so the twin's
-        # guards (NULL group/value) can never drift from batch semantics.
-        # buckets bounds the state at |groups| x buckets; bounds MUST be
-        # explicit here — data-derived bounds would shift between
-        # micro-batches and silently re-bin accumulated history.
-        batch_counts = ks_value_counts(
-            batch_df, group_col, value_col, buckets=buckets, bounds=bounds
-        )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "g", "_v", "_c_gv"
-        )
-        merged = (
-            prev.union(batch_counts)
-            .groupBy("g", "_v")
-            .agg(F.sum("_c_gv").cast("bigint").alias("_c_gv"))
-            .localCheckpoint()  # consumed by the report AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
-
-        report = ks_from_counts(merged).withColumn(
-            "epoch", F.lit(int(epoch_id)).cast("bigint")
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process

@@ -14,12 +14,8 @@ delta as streaming_span_ingest.
 
 State = two mergeable snapshot tables (``sources.layout`` versioned
 snapshots): bigram counts [h_prev, h, cb] and unigram counts [h, cu];
-|V| is the unigram table's row count. Summed counts are NOT
-re-merge-idempotent, so state reads use ``snapshot_before(epoch)`` —
-a retried micro-batch recomputes from pre-epoch state and overwrites
-its own snapshot instead of double-counting. Score appends are
-exactly-once per epoch by default (epoch-keyed dynamic partition
-overwrite).
+|V| is the unigram table's row count. Both are merged per epoch by
+``streaming.merge``; score appends are exactly-once per epoch.
 
 Scale: state is vocabulary/bigram-vocabulary cardinality (the same
 order as the span-ingest gram table); per-batch work is one batch token
@@ -32,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state
+
 
 def streaming_lm_ingest(
     stream: DataFrame,
@@ -41,7 +39,6 @@ def streaming_lm_ingest(
     bigram_dir: str,
     unigram_dir: str,
     scores_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch n-gram counts into the LM state,
     score the batch docs against the merged model, append scores.
@@ -56,41 +53,31 @@ def streaming_lm_ingest(
         lm_token_hashes,
     )
     from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
+        idempotent_epoch_append,
     )
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         h = lm_token_hashes(batch_df, id_col, text_col).localCheckpoint()
         # r16: bigrams map-side from the batch text (no per-doc lag
         # window); h still feeds the unigram counts.
         bigrams = lm_bigrams_from_text(batch_df, id_col, text_col).localCheckpoint()
 
-        batch_uc = h.groupBy("h").agg(F.count(F.lit(1)).cast("bigint").alias("cu"))
-        prev_uc = snapshot_before(spark, unigram_dir, epoch_id).select("h", "cu")
-        merged_uc = (
-            prev_uc.union(batch_uc)
-            .groupBy("h")
-            .agg(F.sum("cu").cast("bigint").alias("cu"))
-            .localCheckpoint()  # consumed by scoring AND the snapshot
-            # write; must not read a plan referencing its own output dir
+        merged_uc = merge_state(
+            h.groupBy("h").agg(F.count(F.lit(1)).cast("bigint").alias("cu")),
+            ["h"],
+            [F.sum("cu").cast("bigint").alias("cu")],
+            state_dir=unigram_dir,
+            epoch_id=epoch_id,
         )
-        snapshot_overwrite(merged_uc, unigram_dir, version=epoch_id)
-
-        batch_bc = bigrams.groupBy("h_prev", "h").agg(
-            F.count(F.lit(1)).cast("bigint").alias("cb")
+        merged_bc = merge_state(
+            bigrams.groupBy("h_prev", "h").agg(
+                F.count(F.lit(1)).cast("bigint").alias("cb")
+            ),
+            ["h_prev", "h"],
+            [F.sum("cb").cast("bigint").alias("cb")],
+            state_dir=bigram_dir,
+            epoch_id=epoch_id,
         )
-        prev_bc = snapshot_before(spark, bigram_dir, epoch_id).select(
-            "h_prev", "h", "cb"
-        )
-        merged_bc = (
-            prev_bc.union(batch_bc)
-            .groupBy("h_prev", "h")
-            .agg(F.sum("cb").cast("bigint").alias("cb"))
-            .localCheckpoint()
-        )
-        snapshot_overwrite(merged_bc, bigram_dir, version=epoch_id)
 
         vsz = merged_uc.agg(F.count(F.lit(1)).alias("vsz"))
         scores = lm_score_bigrams(
@@ -100,13 +87,6 @@ def streaming_lm_ingest(
             vsz,
             id_col,
         )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(scores, scores_dir, epoch_id)
-        else:
-            scores.write.mode("append").parquet(scores_dir)
+        idempotent_epoch_append(scores, scores_dir, epoch_id)
 
     return _process

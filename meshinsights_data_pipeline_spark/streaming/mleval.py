@@ -23,14 +23,15 @@ discipline — no hashed-state caveat here: scores are numeric already):
   the DECIMAL(38,12) folds are exact integers over a fixed quantum,
   so merged sums equal the batch fold over the union.
 
-snapshot_before(epoch) reads keep retries idempotent; report appends
-are exactly-once per epoch by default (the SCD2/drift plumbing).
+Their states are merged per epoch by ``streaming.merge``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state_ingest
 
 
 def streaming_auc_ingest(
@@ -42,7 +43,6 @@ def streaming_auc_ingest(
     cells_dir: str,
     report_dir: str,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (group, score) pos/neg counts
     into the AUC state, recompute the per-group rank-sum AUC from the
@@ -57,48 +57,20 @@ def streaming_auc_ingest(
         auc_cell_counts,
         auc_from_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
+
+    # the batch operator's own count stage — shared so the twin's
+    # guards and label coercion can never drift from batch semantics
+    return merge_state_ingest(
+        lambda batch: auc_cell_counts(batch, [group_col], label_col, score_col),
+        [group_col, "_v"],
+        [
+            F.sum("_pos").cast("bigint").alias("_pos"),
+            F.sum("_neg").cast("bigint").alias("_neg"),
+        ],
+        lambda merged: auc_from_counts(merged, [group_col], round_to=round_to),
+        state_dir=cells_dir,
+        report_dir=report_dir,
     )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # the batch operator's own count stage — shared so the twin's
-        # guards and label coercion can never drift from batch semantics
-        batch_cells = auc_cell_counts(
-            batch_df, [group_col], label_col, score_col
-        )
-        prev = snapshot_before(spark, cells_dir, epoch_id).select(
-            group_col, "_v", "_pos", "_neg"
-        )
-        # write-then-read-back (layout.snapshot_overwrite_read): one fewer
-        # job per epoch than the localCheckpoint idiom; the report reads
-        # the committed _v= files, never the dir being overwritten.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_cells)
-            .groupBy(group_col, "_v")
-            .agg(
-                F.sum("_pos").cast("bigint").alias("_pos"),
-                F.sum("_neg").cast("bigint").alias("_neg"),
-            ),
-            cells_dir,
-            version=epoch_id,
-        )
-
-        report = auc_from_counts(
-            merged, [group_col], round_to=round_to
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
 
 
 def streaming_bootstrap_ingest(
@@ -112,7 +84,6 @@ def streaming_bootstrap_ingest(
     state_dir: str,
     report_dir: str,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge each batch's per-(group, replicate)
     Poisson-bootstrap moments into the state, recompute the per-group
@@ -142,10 +113,6 @@ def streaming_bootstrap_ingest(
         poisson_weight,
     )
     from meshinsights_data_pipeline_spark.operators.dedup import md5_int60
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
-    )
 
     dec12 = "decimal(38,12)"
 
@@ -225,26 +192,7 @@ def streaming_bootstrap_ingest(
             )
         )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_m = _batch_moments(batch_df)
-        prev = snapshot_before(spark, state_dir, epoch_id).select(
-            group_col, "_b", "_s", "_n_w", "_rows"
-        )
-        # write-then-read-back (layout.snapshot_overwrite_read): one fewer
-        # job per epoch than the localCheckpoint idiom.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_m)
-            .groupBy(group_col, "_b")
-            .agg(
-                F.sum("_s").cast(dec12).alias("_s"),
-                F.sum("_n_w").cast("bigint").alias("_n_w"),
-                F.sum("_rows").cast("bigint").alias("_rows"),
-            ),
-            state_dir,
-            version=epoch_id,
-        )
-
+    def _report(merged: DataFrame) -> DataFrame:
         means = merged.filter(F.col("_n_w") > 0).select(
             group_col,
             "_b",
@@ -297,7 +245,7 @@ def streaming_bootstrap_ingest(
             )
             return out_frame
 
-        report = (
+        return (
             sample.join(_pct(alpha / 2.0, "ci_lo"), [group_col])
             .join(_pct(1.0 - alpha / 2.0, "ci_hi"), [group_col])
             .select(
@@ -309,18 +257,20 @@ def streaming_bootstrap_ingest(
                 "ci_lo",
                 "ci_hi",
             )
-            .withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
         )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
 
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return merge_state_ingest(
+        _batch_moments,
+        [group_col, "_b"],
+        [
+            F.sum("_s").cast(dec12).alias("_s"),
+            F.sum("_n_w").cast("bigint").alias("_n_w"),
+            F.sum("_rows").cast("bigint").alias("_rows"),
+        ],
+        _report,
+        state_dir=state_dir,
+        report_dir=report_dir,
+    )
 
 
 def streaming_calibration_ingest(
@@ -333,7 +283,6 @@ def streaming_calibration_ingest(
     state_dir: str,
     report_dir: str,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch per-(group, bin) calibration
     moments into the state, recompute the per-group ECE/MCE/Brier
@@ -349,10 +298,6 @@ def streaming_calibration_ingest(
     """
     if bins < 1:
         raise ValueError(f"bins must be positive, got {bins}")
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
-    )
 
     dec12 = "decimal(38,12)"
     dec18 = "decimal(38,18)"
@@ -388,31 +333,11 @@ def streaming_calibration_ingest(
             )
         )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_m = _batch_moments(batch_df)
-        prev = snapshot_before(spark, state_dir, epoch_id).select(
-            group_col, "_b", "_n", "_np", "_ssum", "_rsum"
-        )
-        # write-then-read-back (layout.snapshot_overwrite_read): one fewer
-        # job per epoch than the localCheckpoint idiom.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_m)
-            .groupBy(group_col, "_b")
-            .agg(
-                F.sum("_n").cast("bigint").alias("_n"),
-                F.sum("_np").cast("bigint").alias("_np"),
-                F.sum("_ssum").cast(dec12).alias("_ssum"),
-                F.sum("_rsum").cast(dec12).alias("_rsum"),
-            ),
-            state_dir,
-            version=epoch_id,
-        )
-
+    def _report(merged: DataFrame) -> DataFrame:
         conf = F.col("_ssum").cast("double") / F.col("_n")
         acc = F.col("_np").cast("double") / F.col("_n")
         gap = F.abs(acc - conf)
-        report = (
+        return (
             merged.groupBy(group_col)
             .agg(
                 F.sum("_n").cast("bigint").alias("n"),
@@ -431,15 +356,18 @@ def streaming_calibration_ingest(
                     F.col("_bsum").cast("double") / F.col("n"), round_to
                 ) + F.lit(0.0)).alias("brier"),
             )
-            .withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
         )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
 
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return merge_state_ingest(
+        _batch_moments,
+        [group_col, "_b"],
+        [
+            F.sum("_n").cast("bigint").alias("_n"),
+            F.sum("_np").cast("bigint").alias("_np"),
+            F.sum("_ssum").cast(dec12).alias("_ssum"),
+            F.sum("_rsum").cast(dec12).alias("_rsum"),
+        ],
+        _report,
+        state_dir=state_dir,
+        report_dir=report_dir,
+    )

@@ -14,10 +14,9 @@ same documented delta as the other scoring twins.
 
 State = ONE mergeable count table ``[h, n_docs]`` keyed on the 60-bit
 gram hash — the same shape streaming_span_ingest maintains, and like it
-bounded by the corpus's distinct-gram count, not its length. Summed
-counts are not re-merge-idempotent, so state reads use
-``snapshot_before(epoch)``; score appends are exactly-once per epoch by
-default.
+bounded by the corpus's distinct-gram count, not its length. It is
+merged per epoch by ``streaming.merge``; score appends are exactly-once
+per epoch.
 
 Scale: per-batch work is one batch shingle pass plus a gram-keyed merge
 and join. The corpus is never rescanned.
@@ -27,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state
 
 NOVELTY_COUNTS_SCHEMA = "h long, n_docs long"
 
@@ -39,7 +40,6 @@ def streaming_novelty_ingest(
     scores_dir: str,
     n: int = 3,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch gram counts into state, score
     the batch docs' novelty against the merged counts, append scores
@@ -53,31 +53,24 @@ def streaming_novelty_ingest(
         shingle_hashes,
     )
     from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
+        idempotent_epoch_append,
     )
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         sh = (
             shingle_hashes(batch_df, id_col, text_col, n)
             .select(id_col, "h")
             .localCheckpoint()  # feeds the counts merge AND the score join
         )
-        batch_counts = sh.groupBy("h").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs")
+        merged = merge_state(
+            sh.groupBy("h").agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs")
+            ),
+            ["h"],
+            [F.sum("n_docs").cast("bigint").alias("n_docs")],
+            state_dir=counts_dir,
+            epoch_id=epoch_id,
         )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "h", "n_docs"
-        )
-        merged = (
-            prev.union(batch_counts)
-            .groupBy("h")
-            .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
-            .localCheckpoint()  # consumed by scoring AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
 
         scores = (
             sh.join(merged, "h")
@@ -91,13 +84,6 @@ def streaming_novelty_ingest(
                 ).alias("novel_frac"),
             )
         )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(scores, scores_dir, epoch_id)
-        else:
-            scores.write.mode("append").parquet(scores_dir)
+        idempotent_epoch_append(scores, scores_dir, epoch_id)
 
     return _process

@@ -20,14 +20,16 @@ for parity testing the twin exposes the same fixed-pivot algebra via
 the state, and the parity test pins floors at the data's true minima.)
 
 State = ``[group, n, sx, sy, sxy, sxx, syy]`` decimal/integer sums —
-one row per group, merged by SUM. Report rows are
-``[epoch, group, n, slope, intercept, r2]``.
+one row per group, SUM-merged per epoch by ``streaming.merge``. Report
+rows are ``[epoch, group, n, slope, intercept, r2]``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state_ingest
 
 
 def streaming_ols_ingest(
@@ -41,7 +43,6 @@ def streaming_ols_ingest(
     state_dir: str,
     report_dir: str,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: SUM-merge batch regression moments
     (folded against the FIXED ``x_floor``/``y_floor`` pivots) into the
@@ -56,11 +57,6 @@ def streaming_ols_ingest(
     sy decimal(38,12), sxy decimal(38,6), sxx decimal(38,6),
     syy decimal(38,6)``).
     """
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
-
     d12, d6 = "decimal(38,12)", "decimal(38,6)"
 
     def _batch_moments(batch_df: DataFrame) -> DataFrame:
@@ -89,26 +85,7 @@ def streaming_ols_ingest(
             )
         )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_m = _batch_moments(batch_df)
-        prev = snapshot_before(spark, state_dir, epoch_id).select(
-            group_col, "n", "sx", "sy", "sxy", "sxx", "syy"
-        )
-        merged = (
-            prev.union(batch_m)
-            .groupBy(group_col)
-            .agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("sx").cast(d12).alias("sx"),
-                F.sum("sy").cast(d12).alias("sy"),
-                F.sum("sxy").cast(d6).alias("sxy"),
-                F.sum("sxx").cast(d6).alias("sxx"),
-                F.sum("syy").cast(d6).alias("syy"),
-            )
-            .localCheckpoint()  # feeds the report AND the snapshot
-        )
-        snapshot_overwrite(merged, state_dir, version=epoch_id)
+    def _report(merged: DataFrame) -> DataFrame:
         nD = F.col("n").cast("double")
         sx = F.col("sx").cast("double")
         sy = F.col("sy").cast("double")
@@ -129,20 +106,26 @@ def streaming_ols_ingest(
             (cov_n * cov_n) / (varx_n * vary_n),
         )
         rnd = lambda c: F.round(c, round_to) + F.lit(0.0)  # noqa: E731
-        report = merged.select(
+        return merged.select(
             F.col(group_col),
             "n",
             rnd(slope).alias("slope"),
             rnd(intercept).alias("intercept"),
             rnd(r2).alias("r2"),
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        )
 
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return merge_state_ingest(
+        _batch_moments,
+        [group_col],
+        [
+            F.sum("n").cast("bigint").alias("n"),
+            F.sum("sx").cast(d12).alias("sx"),
+            F.sum("sy").cast(d12).alias("sy"),
+            F.sum("sxy").cast(d6).alias("sxy"),
+            F.sum("sxx").cast(d6).alias("sxx"),
+            F.sum("syy").cast(d6).alias("syy"),
+        ],
+        _report,
+        state_dir=state_dir,
+        report_dir=report_dir,
+    )

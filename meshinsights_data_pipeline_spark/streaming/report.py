@@ -15,11 +15,8 @@ versioned snapshots and derives the report from state alone:
   token totals and the DECIMAL quality sum (float sums are
   partition-order-dependent; the batch operator makes the same choice).
 
-Summed state is NOT re-merge-idempotent, so each micro-batch reads state
-via ``snapshot_before(epoch)`` — never ``latest_snapshot`` — making every
-attempt a pure function of (pre-epoch state, batch); a retried epoch
-overwrites its own earlier snapshot instead of double-counting (the
-pattern proven by streaming_span_ingest / streaming_lsh_ingest).
+Both tables are merged per epoch by ``streaming.merge``, so a retried
+epoch overwrites its own earlier snapshot instead of double-counting.
 
 Docs are assumed to arrive once (dedup upstream with
 streaming_exact_dedup otherwise — a re-arriving doc would inflate
@@ -30,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state
 
 
 def streaming_report_ingest(
@@ -44,9 +43,8 @@ def streaming_report_ingest(
     """foreachBatch callable maintaining the report state tables.
 
     Per batch: one map-side pass computes (fingerprint, token count,
-    quality) per doc, then two small merges — (source, fp) counts and
-    per-source totals — each read via the pre-epoch version floor and
-    re-written as snapshot ``epoch``. Work per batch is O(batch) map-side
+    quality) per doc, then two small ``merge_state`` merges — (source, fp)
+    counts and per-source totals. Work per batch is O(batch) map-side
     plus two merges keyed on (source, fp) / source; the corpus itself is
     never rescanned.
     """
@@ -55,13 +53,8 @@ def streaming_report_ingest(
         token_count,
         with_quality_score,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         per_doc = with_quality_score(
             batch_df, text_col, out_col="_wq"
         ).select(
@@ -71,37 +64,28 @@ def streaming_report_ingest(
             F.col("_wq").cast("decimal(18,6)").alias("_q"),
         ).localCheckpoint()  # consumed by both merges; one batch pass
 
-        batch_fp = per_doc.groupBy("source", "fp").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs")
+        merge_state(
+            per_doc.groupBy("source", "fp").agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs")
+            ),
+            ["source", "fp"],
+            [F.sum("n_docs").cast("bigint").alias("n_docs")],
+            state_dir=fp_counts_dir,
+            epoch_id=epoch_id,
         )
-        prev_fp = snapshot_before(spark, fp_counts_dir, epoch_id).select(
-            "source", "fp", "n_docs"
-        )
-        merged_fp = (
-            prev_fp.union(batch_fp)
-            .groupBy("source", "fp")
-            .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
-            .localCheckpoint()  # materialize before writing over own input
-        )
-        snapshot_overwrite(merged_fp, fp_counts_dir, version=epoch_id)
-
-        batch_tot = per_doc.groupBy("source").agg(
-            F.sum("_tok").cast("bigint").alias("total_tokens"),
-            F.sum("_q").cast("decimal(28,6)").alias("sum_quality"),
-        )
-        prev_tot = snapshot_before(spark, totals_dir, epoch_id).select(
-            "source", "total_tokens", "sum_quality"
-        )
-        merged_tot = (
-            prev_tot.union(batch_tot)
-            .groupBy("source")
-            .agg(
+        merge_state(
+            per_doc.groupBy("source").agg(
+                F.sum("_tok").cast("bigint").alias("total_tokens"),
+                F.sum("_q").cast("decimal(28,6)").alias("sum_quality"),
+            ),
+            ["source"],
+            [
                 F.sum("total_tokens").cast("bigint").alias("total_tokens"),
                 F.sum("sum_quality").cast("decimal(28,6)").alias("sum_quality"),
-            )
-            .localCheckpoint()
+            ],
+            state_dir=totals_dir,
+            epoch_id=epoch_id,
         )
-        snapshot_overwrite(merged_tot, totals_dir, version=epoch_id)
 
     return _process
 

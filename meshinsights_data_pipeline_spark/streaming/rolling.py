@@ -16,7 +16,7 @@ batch operator for a corpus-wide redo.
 
 Tail state is a pure function of the merged (key, ts, id) order —
 re-merge-idempotent — but reads use ``snapshot_before(epoch)`` for
-uniformity; score appends are exactly-once per epoch by default.
+uniformity; score appends are exactly-once per epoch.
 """
 
 from __future__ import annotations
@@ -47,7 +47,6 @@ def streaming_rolling_ingest(
     tail_dir: str,
     scores_dir: str,
     n: int = 5,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: score the batch rows' rolling n-point
     sum/mean against (retained tail + batch), append
@@ -113,13 +112,10 @@ def streaming_rolling_ingest(
         )
         snapshot_overwrite(tail, tail_dir, version=epoch_id)
 
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        from meshinsights_data_pipeline_spark.sources.layout import (
+            idempotent_epoch_append,
+        )
 
-            idempotent_epoch_append(out, scores_dir, epoch_id)
-        else:
-            out.write.mode("append").parquet(scores_dir)
+        idempotent_epoch_append(out, scores_dir, epoch_id)
 
     return _process

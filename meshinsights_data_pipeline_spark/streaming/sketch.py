@@ -17,14 +17,15 @@ estimate keeps climbing while its CMS hot-key estimates plateau is
 broadening (new long-tail values), the reverse is template
 duplication.
 
-snapshot_before(epoch) reads keep retries idempotent; report appends
-are exactly-once per epoch by default (the SCD2/drift plumbing).
+State is merged per epoch by ``streaming.merge``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state_ingest
 
 
 def streaming_hll_ingest(
@@ -36,7 +37,6 @@ def streaming_hll_ingest(
     state_dir: str,
     report_dir: str,
     round_to: int = 4,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: MAX-merge batch HLL registers into the
     state, recompute the per-group cardinality estimate from the merged
@@ -53,40 +53,17 @@ def streaming_hll_ingest(
         hll_estimate_from_registers,
         hll_register_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_regs = hll_register_counts(
-            batch_df, [group_col], value_col, p=p
-        )
-        prev = snapshot_before(spark, state_dir, epoch_id).select(
-            group_col, "_reg", "_rho"
-        )
-        merged = (
-            prev.union(batch_regs)
-            .groupBy(group_col, "_reg")
-            .agg(F.max("_rho").alias("_rho"))
-            .localCheckpoint()  # feeds the report AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, state_dir, version=epoch_id)
-        report = hll_estimate_from_registers(
+    return merge_state_ingest(
+        lambda batch: hll_register_counts(batch, [group_col], value_col, p=p),
+        [group_col, "_reg"],
+        [F.max("_rho").alias("_rho")],
+        lambda merged: hll_estimate_from_registers(
             merged, [group_col], p, round_to=round_to
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+        ),
+        state_dir=state_dir,
+        report_dir=report_dir,
+    )
 
 
 def streaming_cms_ingest(
@@ -99,7 +76,6 @@ def streaming_cms_ingest(
     items: list[str],
     state_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: SUM-merge batch count-min counters into
     the state, re-estimate the watched ``items``' frequencies from the
@@ -119,43 +95,26 @@ def streaming_cms_ingest(
         cms_counts,
         cms_estimate,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_state = cms_counts(
-            batch_df, [group_col], value_col, depth=depth, width=width
-        )
-        prev = snapshot_before(spark, state_dir, epoch_id).select(
-            group_col, "_row", "_bucket", "_c"
-        )
-        merged = (
-            prev.union(batch_state)
-            .groupBy(group_col, "_row", "_bucket")
-            .agg(F.sum("_c").cast("bigint").alias("_c"))
-            .localCheckpoint()  # feeds the report AND the snapshot
-        )
-        snapshot_overwrite(merged, state_dir, version=epoch_id)
-        items_df = spark.createDataFrame(
+    def _report(merged: DataFrame) -> DataFrame:
+        items_df = merged.sparkSession.createDataFrame(
             [(i,) for i in items], f"{value_col} string"
         )
-        report = cms_estimate(
+        return cms_estimate(
             merged, [group_col], items_df, value_col,
             depth=depth, width=width,
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        )
 
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return merge_state_ingest(
+        lambda batch: cms_counts(
+            batch, [group_col], value_col, depth=depth, width=width
+        ),
+        [group_col, "_row", "_bucket"],
+        [F.sum("_c").cast("bigint").alias("_c")],
+        _report,
+        state_dir=state_dir,
+        report_dir=report_dir,
+    )
 
 
 def streaming_hist_quantile_ingest(
@@ -170,7 +129,6 @@ def streaming_hist_quantile_ingest(
     state_dir: str,
     report_dir: str,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: SUM-merge batch histogram counts into the
     state, re-estimate the quantiles from the merged counts, append
@@ -188,36 +146,16 @@ def streaming_hist_quantile_ingest(
         hist_bin_counts,
         hist_quantile_estimate,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_state = hist_bin_counts(
-            batch_df, [group_col], value_col, lo, hi, bins=bins
-        )
-        prev = snapshot_before(spark, state_dir, epoch_id).select(
-            group_col, "_bin", "_c"
-        )
-        merged = (
-            prev.union(batch_state)
-            .groupBy(group_col, "_bin")
-            .agg(F.sum("_c").cast("bigint").alias("_c"))
-            .localCheckpoint()  # feeds the report AND the snapshot
-        )
-        snapshot_overwrite(merged, state_dir, version=epoch_id)
-        report = hist_quantile_estimate(
+    return merge_state_ingest(
+        lambda batch: hist_bin_counts(
+            batch, [group_col], value_col, lo, hi, bins=bins
+        ),
+        [group_col, "_bin"],
+        [F.sum("_c").cast("bigint").alias("_c")],
+        lambda merged: hist_quantile_estimate(
             merged, [group_col], qs, lo, hi, bins=bins, round_to=round_to
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+        ),
+        state_dir=state_dir,
+        report_dir=report_dir,
+    )

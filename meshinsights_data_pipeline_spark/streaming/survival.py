@@ -16,9 +16,8 @@ observations only (emit a subject once, when its outcome is known).
 
 State = one versioned snapshot table ``[*groups, _t, _c, _d]`` at
 |groups| x |distinct durations| cardinality (quantize durations — whole
-days — to bound it; exact integers group identically in both engines).
-snapshot_before(epoch) reads keep retries idempotent; report appends
-are exactly-once per epoch by default.
+days — to bound it; exact integers group identically in both engines),
+merged per epoch by ``streaming.merge``.
 """
 
 from __future__ import annotations
@@ -27,6 +26,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state_ingest
 
 
 def streaming_km_ingest(
@@ -37,7 +38,6 @@ def streaming_km_ingest(
     *,
     counts_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (group, duration) spine counts
     into the KM state, recompute the survival curves from the merged
@@ -51,43 +51,18 @@ def streaming_km_ingest(
         km_from_counts,
         km_spine,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
     groups = list(group_by)
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # the batch operator's own spine stage — shared so the twin's
-        # guards (NULL duration/event) can never drift from batch
-        batch_counts = km_spine(batch_df, groups, duration_col, event_col)
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            *groups, "_t", "_c", "_d"
-        )
-        merged = (
-            prev.union(batch_counts)
-            .groupBy(*groups, "_t")
-            .agg(
-                F.sum("_c").cast("bigint").alias("_c"),
-                F.sum("_d").cast("bigint").alias("_d"),
-            )
-            .localCheckpoint()  # consumed by the report AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
-
-        report = km_from_counts(merged, groups).withColumn(
-            "epoch", F.lit(int(epoch_id)).cast("bigint")
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    # the batch operator's own spine stage — shared so the twin's
+    # guards (NULL duration/event) can never drift from batch
+    return merge_state_ingest(
+        lambda batch: km_spine(batch, groups, duration_col, event_col),
+        [*groups, "_t"],
+        [
+            F.sum("_c").cast("bigint").alias("_c"),
+            F.sum("_d").cast("bigint").alias("_d"),
+        ],
+        lambda merged: km_from_counts(merged, groups),
+        state_dir=counts_dir,
+        report_dir=report_dir,
+    )

@@ -12,11 +12,10 @@ single batch contains. State therefore carries two snapshot tables:
 - ``counts_dir`` — the accumulated [from_state, to_state, n] table at
   state-cardinality^2.
 
-Summed counts are not re-merge-idempotent, so both snapshots follow the
-``streaming_drift_ingest`` discipline: reads use ``snapshot_before
-(epoch)`` (a retried micro-batch recomputes from pre-epoch state instead
-of double-counting) and writes are per-epoch versioned; the per-epoch
-report append is exactly-once via the epoch-keyed writer.
+The counts table is merged per epoch by ``streaming.merge``; the
+last-state table follows the same discipline by hand (reads use
+``snapshot_before(epoch)``, writes are per-epoch versioned). The
+per-epoch report append is exactly-once via the epoch-keyed writer.
 
 Ordering contract (documented, parity-tested): the feed must be
 entity-time-ordered ACROSS batches — every event for an entity in batch
@@ -30,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.merge import merge_state
 
 
 def streaming_transitions_ingest(
@@ -92,16 +93,13 @@ def streaming_transitions_ingest(
             .groupBy("from_state", "to_state")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         )
-        prev_counts = snapshot_before(spark, counts_dir, epoch_id).select(
-            "from_state", "to_state", "n"
+        merged = merge_state(
+            batch_counts,
+            ["from_state", "to_state"],
+            [F.sum("n").cast("bigint").alias("n")],
+            state_dir=counts_dir,
+            epoch_id=epoch_id,
         )
-        merged = (
-            prev_counts.union(batch_counts)
-            .groupBy("from_state", "to_state")
-            .agg(F.sum("n").cast("bigint").alias("n"))
-            .localCheckpoint()  # consumed by the report AND the snapshot
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
 
         # new last-state table: the batch's latest event per entity wins;
         # entities silent this batch carry forward.

@@ -45,10 +45,33 @@ DRIVER_SUBSET = {
 }
 
 
-def pytest_collection_modifyitems(config, items):
+TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def _collects_whole_suite(config) -> bool:
+    """True when no ``-k`` filter is set and every path argument is this
+    directory (or one containing it), so every test in it is collected."""
+    if config.option.keyword:
+        return False
+    for arg in config.args:
+        path = os.path.abspath(arg)
+        if not os.path.isdir(path) or os.path.relpath(TESTS_DIR, path).startswith(".."):
+            return False
+    return True
+
+
+def pytest_collection_modifyitems(session, config, items):
+    names = {item.name for item in items}
     for item in items:
         if item.name in DRIVER_SUBSET:
             item.add_marker(pytest.mark.driver)
+    # a renamed driver test would silently shrink the smoke tier; only a
+    # clean, unfiltered collection can prove every name still matches
+    missing = sorted(DRIVER_SUBSET - names)
+    if missing and session.testsfailed == 0 and _collects_whole_suite(config):
+        raise pytest.UsageError(
+            f"DRIVER_SUBSET names match no collected test: {missing}"
+        )
 
 
 @pytest.fixture(scope="session")

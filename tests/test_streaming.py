@@ -392,7 +392,6 @@ def test_lsh_ingest_idempotent_epoch_retry(spark, tmp_path):
     process = streaming_lsh_ingest(
         batch, "doc_id", "text",
         signature_dir=sig_dir, pairs_dir=pairs_dir, labels_dir=labels_dir,
-        idempotent=True,
     )
     process(batch, 0)
     first_pairs = sorted(
@@ -680,7 +679,6 @@ def test_span_ingest_retry_does_not_double_count(spark, tmp_path):
     )
     process = streaming_span_ingest(
         doc, "doc_id", "text", counts_dir=counts_dir, spans_dir=spans_dir,
-        idempotent=True,
     )
     process(doc, 0)
     counts1 = sorted(
