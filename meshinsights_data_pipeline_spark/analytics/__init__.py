@@ -4,8 +4,11 @@ from meshinsights_data_pipeline_spark.analytics.variance import (  # noqa: F401
     classify_variance_df,
 )
 from meshinsights_data_pipeline_spark.analytics.issues import (  # noqa: F401
-    low_cycle_counts,
-    short_cycling_stages,
+    cycle_issues,
+    stage_issues,
 )
-from meshinsights_data_pipeline_spark.analytics.curation import curate_stage_data  # noqa: F401
+from meshinsights_data_pipeline_spark.analytics.curation import (  # noqa: F401
+    curate_stage_data,
+    curated_cycles,
+)
 from meshinsights_data_pipeline_spark.analytics.thresholds import baseline_thresholds  # noqa: F401

@@ -12,7 +12,12 @@ Reference semantics (Requirements/ExamplePipelineCode.md:335-360):
   ``min_median_cycle_rows``. With minute-cadence telemetry, rows == minutes,
   so the default 10 flags stages whose typical cycle runs under 10 minutes.
 
-Both are plain aggregations — one shuffle on (stage), map-side combinable.
+Both flags read a per-cycle table — one row per (stage, cycle) with its row
+``count``, the shape ``operators.valid_cycles.cycle_stats`` yields — so they
+are ONE per-stage aggregate: the number of rows per stage is the stage's
+distinct-cycle count and the median of ``count`` is its median cycle
+length. The power pipeline passes its cached valid-cycle table; the
+row-level ``stage_issues`` builds the per-cycle counts first.
 """
 
 from __future__ import annotations
@@ -21,30 +26,38 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MIN_CYCLES_FOR_VALID_BASELINE = 10  # EPC:347-354
+MIN_MEDIAN_CYCLE_ROWS = 10
 
 
-def low_cycle_counts(
-    df: DataFrame, stage_col: str, cycle_col: str, min_cycles: int = MIN_CYCLES_FOR_VALID_BASELINE
+def cycle_issues(
+    cycles: DataFrame,
+    stage_col: str,
+    min_cycles: int = MIN_CYCLES_FOR_VALID_BASELINE,
+    min_median_cycle_rows: int = MIN_MEDIAN_CYCLE_ROWS,
 ) -> DataFrame:
-    """Per-stage distinct-cycle count + low_cycle_count flag (EPC:347-354)."""
-    return df.groupBy(stage_col).agg(
-        F.countDistinct(cycle_col).alias("n_cycles"),
-        (F.countDistinct(cycle_col) < min_cycles).alias("low_cycle_count"),
+    """Per-stage ``n_cycles``/``low_cycle_count`` and
+    ``median_cycle_rows``/``short_cycling`` from a per-cycle table."""
+    per_stage = cycles.groupBy(stage_col).agg(
+        F.count(F.lit(1)).alias("n_cycles"),
+        F.median("count").alias("median_cycle_rows"),
+    )
+    return per_stage.select(
+        stage_col,
+        "n_cycles",
+        (F.col("n_cycles") < min_cycles).alias("low_cycle_count"),
+        "median_cycle_rows",
+        (F.col("median_cycle_rows") < min_median_cycle_rows).alias("short_cycling"),
     )
 
 
-def short_cycling_stages(
+def stage_issues(
     df: DataFrame,
     stage_col: str,
     cycle_col: str,
-    min_median_cycle_rows: int = 10,
+    min_cycles: int = MIN_CYCLES_FOR_VALID_BASELINE,
+    min_median_cycle_rows: int = MIN_MEDIAN_CYCLE_ROWS,
 ) -> DataFrame:
-    """Per-stage short-cycling flag: median cycle length below threshold.
-
-    Two aggregations: rows per (stage, cycle), then exact median per stage.
-    """
-    per_cycle = df.groupBy(stage_col, cycle_col).agg(F.count(F.lit(1)).alias("cycle_rows"))
-    return per_cycle.groupBy(stage_col).agg(
-        F.median("cycle_rows").alias("median_cycle_rows"),
-        (F.median("cycle_rows") < min_median_cycle_rows).alias("short_cycling"),
-    )
+    """Row-level form of ``cycle_issues``: count rows per (stage, cycle)
+    first. Rows with a NULL cycle form no cycle."""
+    cycles = df.filter(F.col(cycle_col).isNotNull()).groupBy(stage_col, cycle_col).count()
+    return cycle_issues(cycles, stage_col, min_cycles, min_median_cycle_rows)

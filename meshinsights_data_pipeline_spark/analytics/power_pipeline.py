@@ -10,10 +10,17 @@ Reference flow (Requirements/ExamplePipelineCode.md:104-131):
 6. _identify_power_variance_per_stage_curated (upgrade-only)  [EPC:275-332]
 7. _calculate_baseline_power_thresholds                       [EPC:456-484]
 
-Job-boundary design (SURVEY §3.3): steps 2 and 5 stay one fused lazy plan;
-steps 3/6 are applyInPandas jobs; the gating decisions (4, 6's skip rule, 7)
-collect per-stage SCALARS only — these collects are the deliberate,
-documented boundaries. No bulk data ever reaches the driver.
+Job-boundary design (SURVEY §3.3): step 2 aggregates each cycle ONCE into a
+per-cycle table (stage, cycle, count, median, mode, first timestamp) with a
+single groupBy, caches its input rows and the small valid-cycle table, and
+yields the kept rows as a broadcast semi-join of the two. Steps 4-7 read
+that table, never the rows: issues are one per-stage aggregate of it,
+curation (5) is a projection of it, and the curated re-check (6) and
+thresholds (7) read the curation. Steps 3/6 are applyInPandas jobs; the
+gating decisions (4, 6's skip rule, 7) collect per-stage SCALARS only —
+these collects are the deliberate, documented boundaries. No bulk data ever
+reaches the driver. The two caches belong to the run: the Pipeline releases
+them when it ends.
 
 Canonical conditions (Architectural Options/Opus.md:513-526): thresholds run
 iff no stage is "High"; the AI step (genai/) runs iff some stage is "High"
@@ -25,11 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from meshinsights_data_pipeline_spark.analytics.issues import (
-    low_cycle_counts,
-    short_cycling_stages,
-)
-from meshinsights_data_pipeline_spark.analytics.curation import curate_stage_data
+from meshinsights_data_pipeline_spark.analytics.issues import cycle_issues
+from meshinsights_data_pipeline_spark.analytics.curation import curated_cycles
 from meshinsights_data_pipeline_spark.analytics.thresholds import thresholds_dict
 from meshinsights_data_pipeline_spark.analytics.variance import (
     VarianceParams,
@@ -39,7 +43,10 @@ from meshinsights_data_pipeline_spark.core.context import PipelineContext
 from meshinsights_data_pipeline_spark.core.pipeline import Pipeline, PipelineConfig
 from meshinsights_data_pipeline_spark.core.processor import Processor
 from meshinsights_data_pipeline_spark.operators.recent_n import recent_n
-from meshinsights_data_pipeline_spark.operators.valid_cycles import filter_valid_cycles
+from meshinsights_data_pipeline_spark.operators.valid_cycles import (
+    cycle_stats,
+    valid_cycle_stats,
+)
 
 MAX_RAW_SAMPLES_PER_STAGE = 5000  # EPC:232
 MIN_SAMPLES_FOR_TEST_CURATED = 20  # EPC:303
@@ -69,8 +76,18 @@ def _variance_rows_to_dict(rows) -> dict:
     }
 
 
+def _cycles(context: PipelineContext, cols: Columns) -> DataFrame:
+    """The per-cycle table of step 2; rebuilt from the (already filtered)
+    rows when a partial run starts after it."""
+    cycles = context.processed_data.get("power.cycles")
+    if cycles is None:
+        cycles = cycle_stats(context.raw_data, [cols.stage, cols.cycle], cols.value, cols.ts)
+    return cycles
+
+
 class FilterValidCyclesStep(Processor):
-    """EPC:156-218."""
+    """EPC:156-218. Leaves the per-cycle table of the valid cycles as
+    ``power.cycles`` and the kept rows as ``raw_data``/``power.filtered``."""
 
     def __init__(self, cols: Columns, min_cycle_length=4, persist: bool = True, **kw):
         super().__init__(name="filter_valid_cycles", **kw)
@@ -78,23 +95,28 @@ class FilterValidCyclesStep(Processor):
         self.persist = persist
 
     def validate_prerequisites(self, context):
-        df = self.require_raw_data(context)
-        self.require_columns(df, [self.cols.stage, self.cols.value, self.cols.cycle])
+        df, c = self.require_raw_data(context), self.cols
+        self.require_columns(df, [c.stage, c.value, c.cycle, c.ts])
 
     def process(self, context):
         c = self.cols
-        kept = filter_valid_cycles(
-            context.raw_data, [c.stage, c.cycle], c.value, min_cycle_length=self.min_cycle_length
+        keys = [c.stage, c.cycle]
+        rows = context.raw_data
+        if self.persist:
+            # The cycle aggregate and every row-level step (variance, prompt)
+            # read these rows; cached, the scan + sessionize lineage runs once.
+            rows = self.persist_for_run(context, rows)
+        cycles = valid_cycle_stats(
+            cycle_stats(rows, keys, c.value, c.ts), keys, c.value,
+            min_cycle_length=self.min_cycle_length,
         )
         if self.persist:
-            # Every downstream step (variance, issues, curation) runs its own
-            # job over this frame; without persist the scan+sessionize+filter
-            # lineage recomputes per job. MEMORY_AND_DISK is spillable, so
-            # this holds at cluster scale too (measured: ~1.9x end-to-end at
-            # sf0.1 on local[32]).
-            kept = kept.persist()
+            # Read by the semi-join and by steps 4-7; one row per cycle.
+            cycles = self.persist_for_run(context, cycles)
+        kept = rows.join(F.broadcast(cycles.select(*keys)), keys, "left_semi")
         out = context.model_copy(update={"raw_data": kept})
         out.processed_data["power.filtered"] = kept
+        out.processed_data["power.cycles"] = cycles
         return out
 
 
@@ -118,7 +140,7 @@ class ClassifyVarianceRawStep(Processor):
 
 class IdentifyIssuesStep(Processor):
     """EPC:335-360: low_cycle_count always; short_cycling only for High
-    stages that are not low_cycle_count."""
+    stages that are not low_cycle_count. One aggregate of the cycle table."""
 
     def __init__(self, cols: Columns, min_cycles=10, **kw):
         super().__init__(name="identify_issues", **kw)
@@ -126,29 +148,16 @@ class IdentifyIssuesStep(Processor):
 
     def process(self, context):
         c = self.cols
-        df = context.raw_data
-        low = {
-            r[c.stage]: bool(r["low_cycle_count"])
-            for r in low_cycle_counts(df, c.stage, c.cycle, self.min_cycles).collect()
-        }
-        high_stages = [
-            s for s, v in context.variance_analysis.items() if v.get("variance") == "High"
-        ]
-        issues: dict[str, list[str]] = {s: [] for s in low}
-        for s, is_low in low.items():
-            if is_low:
-                issues[s].append("low_cycle_count")
-        eligible = [s for s in high_stages if not low.get(s, False)]
-        if eligible:
-            sc = {
-                r[c.stage]: bool(r["short_cycling"])
-                for r in short_cycling_stages(
-                    df.filter(F.col(c.stage).isin(eligible)), c.stage, c.cycle
-                ).collect()
-            }
-            for s, flag in sc.items():
-                if flag:
-                    issues[s].append("short_cycling")
+        high = {s for s, v in context.variance_analysis.items() if v.get("variance") == "High"}
+        issues: dict[str, list[str]] = {}
+        for r in cycle_issues(_cycles(context, c), c.stage, self.min_cycles).collect():
+            s = r[c.stage]
+            if r["low_cycle_count"]:
+                issues[s] = ["low_cycle_count"]
+            elif s in high and r["short_cycling"]:
+                issues[s] = ["short_cycling"]
+            else:
+                issues[s] = []
         out = context.model_copy()
         out.issues = issues
         return out
@@ -156,7 +165,7 @@ class IdentifyIssuesStep(Processor):
 
 class CurateStageDataStep(Processor):
     """EPC:363-453: issues or High variance -> stage excluded (empty);
-    Low -> per-cycle medians."""
+    Low -> per-cycle medians, projected from the cycle table."""
 
     def __init__(self, cols: Columns, **kw):
         super().__init__(name="curate_stage_data", **kw)
@@ -170,8 +179,8 @@ class CurateStageDataStep(Processor):
             if not context.issues.get(s)
             and context.variance_analysis.get(s, {}).get("variance") == "Low"
         ]
-        curated = curate_stage_data(
-            context.raw_data, curatable, c.stage, c.cycle, c.value, c.ts
+        curated = curated_cycles(
+            _cycles(context, c), curatable, c.stage, c.cycle, c.value, c.ts
         )
         out = context.model_copy()
         out.processed_data["power.curated"] = curated

@@ -48,6 +48,11 @@ class PipelineContext(BaseModel):
     variance_analysis: dict[str, Any] = Field(default_factory=dict)
     ai_analysis: dict[str, Any] = Field(default_factory=dict)
 
+    # Frames a step persisted for the rest of the run
+    # (Processor.persist_for_run). Every copy of the context shares the list;
+    # Pipeline.run / run_partial unpersist its frames when the run ends.
+    persisted: list[DataFrame] = Field(default_factory=list)
+
     # Observability (context.py:86-122)
     execution_log: list[dict[str, Any]] = Field(default_factory=list)
     errors: list[dict[str, Any]] = Field(default_factory=list)

@@ -12,6 +12,10 @@ Reference parity: src/core/pipeline.py:14-171. Same semantics:
   error/checkpoint wrapper (pipeline.py:145-171)
 - error policy: stop_on_error -> re-raise; else record + continue with the
   unchanged context (pipeline.py:14-16,131-135).
+- cache ownership: frames a step persisted with ``Processor.persist_for_run``
+  are unpersisted when run / run_partial ends, on error too. Tables handed
+  back to the caller stay valid lazy plans; a frame that was already cached
+  when it reached the pipeline is never released.
 """
 
 from __future__ import annotations
@@ -39,15 +43,26 @@ def _snapshot(context: PipelineContext, persist_tables: bool) -> PipelineContext
     (immutable lazy plans). Optionally persists tables so replay from a
     checkpoint doesn't recompute the lineage."""
     if persist_tables:
-        if context.raw_data is not None:
-            context.raw_data.persist()
-        for df in context.processed_data.values():
+        tables = [context.raw_data, *context.processed_data.values()]
+        tables = [df for df in tables if df is not None]
+        for df in tables:
             df.persist()
+        # the checkpoint now owns these caches, so the run must not release them
+        context.persisted[:] = [
+            df for df in context.persisted if all(df is not t for t in tables)
+        ]
     snap = context.model_copy(update={"processed_data": dict(context.processed_data)})
     for k in ("config", "stages", "issues", "thresholds", "variance_analysis",
               "ai_analysis", "execution_log", "errors", "warnings"):
         setattr(snap, k, copy.deepcopy(getattr(context, k)))
     return snap
+
+
+def _release(context: PipelineContext) -> None:
+    """Unpersist the run's frames, newest first: a cache built on top of
+    another goes before its input, so Spark never recompiles it."""
+    while context.persisted:
+        context.persisted.pop().unpersist()
 
 
 class Pipeline:
@@ -77,28 +92,31 @@ class Pipeline:
 
     # pipeline.py:101-143
     def run(self, context: PipelineContext) -> PipelineContext:
-        for processor in self.processors:
-            if not self.should_execute(processor, context):
-                context.log_execution(processor.name, {"skipped": True})
-                continue
-            # Effective policy = processor AND pipeline, computed WITHOUT
-            # mutating the (stateless, shareable) processor instance: the
-            # attribute is restored after the call.
-            own_policy = processor.stop_on_error
-            processor.stop_on_error = own_policy and self.config.stop_on_error
-            try:
-                context = processor(context)
-            except Exception:
-                if self.config.stop_on_error:
-                    raise
-                continue
-            finally:
-                processor.stop_on_error = own_policy
-            if self.config.enable_checkpoints:
-                self.checkpoints[processor.name] = _snapshot(
-                    context, self.config.persist_checkpointed_tables
-                )
-        return context
+        try:
+            for processor in self.processors:
+                if not self.should_execute(processor, context):
+                    context.log_execution(processor.name, {"skipped": True})
+                    continue
+                # Effective policy = processor AND pipeline, computed WITHOUT
+                # mutating the (stateless, shareable) processor instance: the
+                # attribute is restored after the call.
+                own_policy = processor.stop_on_error
+                processor.stop_on_error = own_policy and self.config.stop_on_error
+                try:
+                    context = processor(context)
+                except Exception:
+                    if self.config.stop_on_error:
+                        raise
+                    continue
+                finally:
+                    processor.stop_on_error = own_policy
+                if self.config.enable_checkpoints:
+                    self.checkpoints[processor.name] = _snapshot(
+                        context, self.config.persist_checkpointed_tables
+                    )
+            return context
+        finally:
+            _release(context)
 
     # pipeline.py:145-171
     def run_partial(self, context: PipelineContext, start: str, end: str) -> PipelineContext:
@@ -108,9 +126,12 @@ class Pipeline:
         i, j = names.index(start), names.index(end)
         if i > j:
             raise StopIteration(f"start {start!r} comes after end {end!r}")
-        for processor in self.processors[i : j + 1]:
-            if not self.should_execute(processor, context):
-                context.log_execution(processor.name, {"skipped": True})
-                continue
-            context = processor(context)
-        return context
+        try:
+            for processor in self.processors[i : j + 1]:
+                if not self.should_execute(processor, context):
+                    context.log_execution(processor.name, {"skipped": True})
+                    continue
+                context = processor(context)
+            return context
+        finally:
+            _release(context)

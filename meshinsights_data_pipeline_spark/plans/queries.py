@@ -438,7 +438,7 @@ _ORACLES: dict[str, str] = {
                 SELECT user_id, cycle, value,
                        ROW_NUMBER() OVER (PARTITION BY user_id, cycle
                                           ORDER BY COUNT(*) DESC, value ASC) AS rn
-                FROM sess GROUP BY user_id, cycle, value
+                FROM sess WHERE value IS NOT NULL GROUP BY user_id, cycle, value
             ) WHERE rn = 1
         ),
         valid AS (

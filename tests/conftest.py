@@ -31,6 +31,9 @@ DRIVER_SUBSET = {
     "test_llm_map_adds_completions",         # llm batch map
     "test_minhash_dedup_pairs_verified",     # dedup minhash chain
     "test_valid_cycle_filter_parity",        # reference parity
+    "test_null_energy_never_wins_cycle_mode",  # per-cycle mode skips NULLs
+    "test_cycle_table_issues_parity",        # power pipeline's cycle table
+    "test_power_pipeline_releases_its_caches",  # step caches released per run
     "test_gopher_quality_is_map_side",       # plan shapes (corpus)
     "test_basket_pair_stats_broadcast_dims", # plan shapes (basket r17)
     "test_q02_filter_pushed_to_scan",        # TPC-H plan pushdown

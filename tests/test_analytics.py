@@ -147,6 +147,69 @@ def test_power_pipeline_end_to_end(spark):
     assert "calculate_thresholds" in names
 
 
+def test_power_pipeline_releases_its_caches(spark):
+    """The frames the pipeline persists are released when the run ends, on
+    error too; a frame the caller cached stays cached."""
+    from pyspark import StorageLevel
+
+    from meshinsights_data_pipeline_spark.analytics.power_pipeline import (
+        FilterValidCyclesStep,
+        build_power_pipeline,
+    )
+    from meshinsights_data_pipeline_spark.core import Pipeline, PipelineContext, Processor
+
+    class Boom(Processor):
+        def process(self, context):
+            context.processed_data["power.cycles"].count()
+            raise RuntimeError("boom")
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    build_power_pipeline().run(PipelineContext(raw_data=_hvac_fixture(spark)))
+    assert rdds().size() == before
+
+    with pytest.raises(RuntimeError, match="boom"):
+        Pipeline([FilterValidCyclesStep(Columns()), Boom()]).run(
+            PipelineContext(raw_data=_hvac_fixture(spark))
+        )
+    assert rdds().size() == before
+
+    cached = _hvac_fixture(spark).persist()
+    try:
+        cached.count()
+        build_power_pipeline().run(PipelineContext(raw_data=cached))
+        assert cached.storageLevel != StorageLevel.NONE
+        assert rdds().size() == before + 1
+    finally:
+        cached.unpersist()
+
+
+def test_processor_logs_jobs_per_step(spark):
+    """Every executed step logs the number of Spark jobs it ran under its
+    own job group; a skipped step logs none; the caller's group survives."""
+    from meshinsights_data_pipeline_spark.analytics.power_pipeline import build_power_pipeline
+    from meshinsights_data_pipeline_spark.core.context import PipelineContext
+
+    sc = spark.sparkContext
+    pipe = build_power_pipeline(Columns())
+    pipe.conditions["ai_classification"] = lambda ctx: False
+    sc.setJobGroup("caller", "caller's jobs")
+    try:
+        out = pipe.run(PipelineContext(raw_data=_hvac_fixture(spark)))
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "caller's jobs"
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    log = {e["processor"]: e for e in out.execution_log}
+    assert "jobs" not in log["ai_classification"] and log["ai_classification"]["skipped"]
+    ran = [e for e in out.execution_log if not e.get("skipped")]
+    assert len(ran) == 6
+    assert all(type(e["jobs"]) is int for e in ran)
+    assert log["identify_issues"]["jobs"] >= 1  # one collect of the issue flags
+    assert log["curate_stage_data"]["jobs"] == 0  # a lazy projection
+
+
 def test_curated_recheck_upgrade_only(spark):
     """A stage whose raw samples look unimodal but whose per-cycle medians
     are bimodal must be upgraded to High by the curated re-check

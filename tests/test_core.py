@@ -8,6 +8,7 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from meshinsights_data_pipeline_spark.core import Pipeline, PipelineConfig, PipelineContext, Processor
@@ -130,3 +131,28 @@ def test_run_partial(spark):
     assert set(out.stages) == {"b", "c"}
     with pytest.raises(StopIteration):
         p.run_partial(PipelineContext(), "x", "c")
+
+
+class PersistStep(Processor):
+    def process(self, context):
+        out = context.model_copy()
+        t = self.persist_for_run(context, context.raw_data.selectExpr("id * 2 AS v"))
+        t.count()
+        out.processed_data["t"] = t
+        return out
+
+
+def test_run_releases_step_caches_unless_checkpointed(spark):
+    p = Pipeline([PersistStep()])
+    out = p.run(PipelineContext(raw_data=spark.range(10)))
+    assert out.processed_data["t"].storageLevel == StorageLevel.NONE
+    out = p.run_partial(PipelineContext(raw_data=spark.range(10)), "PersistStep", "PersistStep")
+    assert out.processed_data["t"].storageLevel == StorageLevel.NONE
+    # a persisted checkpoint owns the step's cache: the run must not drop it
+    config = PipelineConfig(enable_checkpoints=True, persist_checkpointed_tables=True)
+    out = Pipeline([PersistStep()], config=config).run(PipelineContext(raw_data=spark.range(10)))
+    try:
+        assert out.processed_data["t"].storageLevel != StorageLevel.NONE
+    finally:
+        out.processed_data["t"].unpersist()
+        out.raw_data.unpersist()

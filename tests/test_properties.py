@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from meshinsights_data_pipeline_spark.functions.scalars import string_tail_lower
 from meshinsights_data_pipeline_spark.operators.mode import grouped_mode
+from meshinsights_data_pipeline_spark.operators.valid_cycles import cycle_stats
 from meshinsights_data_pipeline_spark.operators.weekly import (
     sunday_week_start,
     week_label,
@@ -50,6 +51,29 @@ def test_grouped_mode_matches_pandas_tiebreak(spark, rows):
         counts = Counter(v for gg, v in rows if gg == g)
         best = max(counts.items(), key=lambda kv: (kv[1], -kv[0]))[0]
         assert got[g] == best, f"group {g}: {got[g]} != {best} ({counts})"
+
+
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(0, 3), st.none() | st.integers(-5, 5)), min_size=1, max_size=60
+    )
+)
+@SLOW
+def test_cycle_stats_mode_matches_pandas_pair_count(spark, rows):
+    """The per-cycle mode is the reference's pair count (EPC:188-202):
+    ``groupby([cycle, value]).size()`` drops NULL keys, ``idxmax`` takes the
+    first maximum in sorted order (ties -> smallest value); a cycle of only
+    NULLs has no mode."""
+    import pandas as pd
+
+    df = spark.createDataFrame(rows, "g int, v int")
+    got = {r["g"]: r["mode_v"] for r in cycle_stats(df, ["g"], "v").collect()}
+    pairs = pd.DataFrame(rows, columns=["g", "v"]).groupby(["g", "v"]).size()
+    pairs = pairs.rename("n").reset_index()
+    modes = pairs.loc[pairs.groupby("g")["n"].idxmax()].set_index("g")["v"]
+    for g in {g for g, _ in rows}:
+        want = int(modes[g]) if g in modes.index else None
+        assert got[g] == want, f"group {g}: {got[g]} != {want} ({rows})"
 
 
 @given(d=st.dates(min_value=date(1990, 1, 6), max_value=date(2100, 12, 25)))
